@@ -88,16 +88,23 @@ object Engine {
   def registerAll(spark: SparkSession, sfDir: String): Unit =
     tableNames.foreach(n => table(spark, sfDir, n).createOrReplaceTempView(n))
 
-  /** Library-user entry point: a session tuned for the local[32] harness.
-    * On a real cluster the same knobs come from spark-submit; AQE stays on
-    * so shuffle partition counts + skew joins re-plan from runtime stats.
+  /** The one session builder: every entry point (Bench, BenchOne,
+    * Verify, Explain, ScaleUp) and library users start here. Runs
+    * `local[cpus]`, where `cpus` is `SPARK_GRAFT_CPUS` if set, else the
+    * machine's core count, with one shuffle partition per core. Input
+    * splits are 4m: testdata tables are single small parquet files, and
+    * smaller splits let scans and partial aggs use every local core (on
+    * a real cluster the 128m default is right, and the same knobs come
+    * from spark-submit). AQE is Spark's default and stays on.
     */
-  def session(appName: String = "graft", master: String = "local[32]"): SparkSession = {
+  def session(appName: String = "graft"): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .appName(appName)
-      .master(master)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.files.maxPartitionBytes", "4m")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

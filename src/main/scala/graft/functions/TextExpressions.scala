@@ -163,7 +163,7 @@ object TextOps {
   }
 
   /** Count of space-delimited tokens fully matching `[a-z]+` — the
-    * `size(filter(split(text, ' '), x.rlike("^[a-z]+$")))` chain as one
+    * `size(filter(split(text, ' '), x.rlike("^[a-z]+\\z")))` chain as one
     * byte scan. ASCII a–z bytes never occur inside multibyte UTF-8
     * sequences, so the byte test IS the character test; an empty token
     * fails the `+`.
@@ -640,7 +640,7 @@ case class LexHits(child: Expression, words: Seq[String])
 }
 
 /** Per-row count of fully-alphabetic tokens (see [[TextOps.alphaHits]])
-  * — replaces the interpreted per-token `rlike("^[a-z]+$")` filter on
+  * — replaces the interpreted per-token `rlike("^[a-z]+\\z")` filter on
   * the gopher/quality-model corpus paths.
   */
 case class AlphaHits(child: Expression) extends UnaryExpression {

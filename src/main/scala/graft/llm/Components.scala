@@ -16,12 +16,12 @@ import graft.{Engine, Q}
   * relational operators at all) — `EXT` like the rest of the dedup family.
   *
   * Two algorithms, both free of any all-pairs shape (see the method docs):
-  * alternating large-star/small-star edge contraction (default;
-  * polylog worst-case rounds INDEPENDENT of graph diameter — Kiveris et
-  * al. prove O(log² n), observed ~6 on the sf0.1/sf1.0 near-dup graphs
-  * whose chain shape forces propagation through 18+ rounds) and
-  * min-label propagation with pointer jumping (fallback,
-  * `GRAFT_CC_ALGO=jump`).
+  * alternating large-star/small-star edge contraction (the one queries
+  * run; polylog worst-case rounds INDEPENDENT of graph diameter —
+  * Kiveris et al. prove O(log² n), observed ~6 on the sf0.1/sf1.0
+  * near-dup graphs whose chain shape forces propagation through 18+
+  * rounds) and min-label propagation with pointer jumping (the reference
+  * the specs check contraction against).
   *
   * Scale notes:
   *  - Per-round lineage is re-rooted over persisted RDDs and the edge
@@ -45,21 +45,13 @@ object Components {
     * Returns `(id, label)` for every vertex incident to at least one edge,
     * where `label` = the smallest vertex id in the component.
     *
-    * Dispatches between two implementations (env `GRAFT_CC_ALGO`):
-    * alternating large-star/small-star edge contraction (`stars`, the
-    * default — polylog rounds regardless of diameter) and min-label
-    * propagation with pointer jumping (`jump` — O(log diameter) in tree
-    * depth but diameter-bound on residual chains; kept as the measured
-    * fallback and for A/B tracing). Any other value fails loudly — a
-    * typo silently running the wrong variant would poison an A/B trace.
+    * Runs alternating large-star/small-star edge contraction
+    * ([[connectedComponentsStars]] — polylog rounds regardless of
+    * diameter). [[connectedComponentsJump]] is the spec-pinned reference
+    * it must agree with.
     */
   def connectedComponents(edges: DataFrame, maxIters: Int = 25): DataFrame =
-    sys.env.getOrElse("GRAFT_CC_ALGO", "stars") match {
-      case "jump"  => connectedComponentsJump(edges, maxIters)
-      case "stars" => connectedComponentsStars(edges, maxIters)
-      case other => throw new IllegalArgumentException(
-        s"GRAFT_CC_ALGO must be 'stars' or 'jump'; got '$other'")
-    }
+    connectedComponentsStars(edges, maxIters)
 
   /** Shared iterative-loop scaffolding for both CC variants: size the
     * loop's shuffle partitions to the derived graph (~100k rows per
@@ -244,8 +236,9 @@ object Components {
   }
 
   /** Min-label propagation with pointer jumping over an undirected edge
-    * list `(d1, d2)` — the pre-round-6 default, kept selectable via
-    * `GRAFT_CC_ALGO=jump`.
+    * list `(d1, d2)` — the pre-round-6 default, kept as the reference
+    * LlmSpec and ComponentsSpec check [[connectedComponentsStars]]
+    * against.
     *
     * Two iterative-algorithm disciplines keep rounds O(1) in driver cost
     * (first learned the hard way: without them the loop OOMs the driver
@@ -311,7 +304,7 @@ object Components {
       // Cutting the tail needs edge-rewiring contraction
       // (large-star/small-star), which rewrites the edge set per round —
       // landed in round 6 as [[connectedComponentsStars]] (6 rounds vs
-      // 18, ~1.8× faster); this variant stays as the measured fallback.
+      // 18, ~1.8× faster); this variant stays as its spec reference.
       val nextRdd = prop
         .join(prop.select(col("id").as("label"), col("label").as("label2")),
           Seq("label"), "left")
@@ -569,19 +562,6 @@ object Components {
       .limit(25)
   }
 
-  /** The shared simhash near-dup pair pipeline (d1 < d2) — the graph
-    * family's common upstream, derivable per query. Kept as the
-    * recompute baseline for [[graft.PairGraphBench]].
-    */
-  private[graft] def simhashPairsRecompute(s: SparkSession, dir: String): DataFrame = {
-    val docs = Engine.table(s, dir, "documents")
-    val bits = Dedup.simhashBitsFor(docs.count())
-    Dedup.simhashNearDup(
-        Dedup.simhashSignaturesStateless(docs, bits),
-        maxHamming = Dedup.simhashMaxHamming, bits = bits)
-      .select(col("d1"), col("d2"))
-  }
-
   /** Bump when EITHER signature pipeline's semantics change (shingle
     * config, SimHash/MinHash signature derivation, banding, hamming
     * radius) — one version covers every artifact suffix (`""`/`_cc`/
@@ -636,14 +616,6 @@ object Components {
     }
   }
 
-  /** Bench hook: forget only the labels memo so the next
-    * [[simhashLabels]] call re-checks the filesystem (and rebuilds if
-    * the dir was deleted).
-    */
-  private[graft] def dropLabelMemo(dir: String): Unit = {
-    builtIndexes.remove(s"${pairGraphPath(dir)}_cc"): Unit
-  }
-
   /** Test hook + hygiene: forget this JVM's memo and delete the given
     * dataset's index dirs (pair graph + labels).
     */
@@ -663,8 +635,9 @@ object Components {
 
   /** The shared pair graph, materialized ONCE per dataset and read back
     * by every graph-family consumer — the writeIvfIndex pattern applied
-    * to the graph family's common upstream. Measured (PairGraphBench,
-    * round 8, sf0.1 local[32], min-of-2): five-consumer recompute 16.2 s
+    * to the graph family's common upstream. Measured (round 8, sf0.1
+    * local[32], min-of-2; DESIGN.md § Pair-graph materialize-once):
+    * five-consumer recompute 16.2 s
     * vs 1.5 s write + 9.0 s reads = 10.5 s (1.54×); every consumer wins
     * individually (e.g. q_graph_degree_hist 1.87 → 0.50 s). CLAUDE.md's
     * negative result on caching exploded SHINGLE intermediates doesn't
@@ -697,8 +670,9 @@ object Components {
     * suffices. Labels are vertex-sized (smaller than the edge list), the
     * loop's output is deterministic (min-id labels independent of round
     * schedule), and the production dedup pipeline labels once, then
-    * selects/audits against the labeling. Measured (LabelCacheBench,
-    * round 9, sf0.1 local[32], min-of-2): three-consumer recompute
+    * selects/audits against the labeling. Measured (round 9, sf0.1
+    * local[32], min-of-2; DESIGN.md § CC-labeling materialize-once):
+    * three-consumer recompute
     * 8.22 s vs 3.07 s build+write + 0.61 s reads = 3.68 s (2.2×; every
     * consumer individually 2.7-2.8 s → 0.12-0.25 s) — amortizing
     * further with every added consumer. Returns `(id, label)` for every
@@ -726,8 +700,8 @@ object Components {
     * signature table is doc-sized (6 fixed-width hex strings per doc),
     * values are engine-deterministic strings (parquet round-trip is
     * bit-exact), and the production ingest persists exactly this: sign
-    * once, band/probe everywhere. Measured in MinhashCacheBench
-    * (round 10, DESIGN.md).
+    * once, band/probe everywhere. Measured in round 10 (DESIGN.md
+    * § MinHash sig+candidate materialize-once).
     */
   private[graft] def minhashSigs(s: SparkSession, dir: String): DataFrame = {
     val path = s"${pairGraphPath(dir)}_mh"
@@ -758,14 +732,6 @@ object Components {
       }
     })
     s.read.parquet(path).select(col("d1"), col("d2"))
-  }
-
-  /** Bench hook: forget the MinHash memos so the next call re-checks the
-    * filesystem (and rebuilds if the dirs were deleted).
-    */
-  private[graft] def dropMinhashMemo(dir: String): Unit = {
-    builtIndexes.remove(s"${pairGraphPath(dir)}_mh")
-    builtIndexes.remove(s"${pairGraphPath(dir)}_mhc"): Unit
   }
 
   /** The df-capped jaccard-SCORED pair index `(d1, d2, n1, n2, inter)`
@@ -1074,14 +1040,19 @@ object Components {
     // quality_ppm·2^42 + (2^42−1 − doc_id) is a 63-bit max whose order ≡
     // (quality_ppm DESC, doc_id ASC), and shiftright(kp, 42) IS
     // max(quality_ppm) (the pack's leading component). Codegen
-    // HashAggregate, map-side-combinable; doc_id domain guarded loudly;
-    // [[keepBestFromLabelsRef]] is the spec-pinned semantic reference.
+    // HashAggregate, map-side-combinable; doc_id domain and a null
+    // quality_ppm (whose null key max would skip, where the reference
+    // still picks a member) guarded loudly; [[keepBestFromLabelsRef]] is
+    // the spec-pinned semantic reference.
     val idCap = (1L << 42) - 1
-    val invId = when(col("doc_id") < 0 || col("doc_id") > idCap,
+    val enc = when(col("doc_id") < 0 || col("doc_id") > idCap,
         raise_error(concat(lit("keepBestFromLabels: doc_id outside "
           + "[0, 2^42): "), col("doc_id").cast(StringType))))
-      .otherwise(lit(idCap) - col("doc_id")).cast(LongType)
-    val enc = col("quality_ppm") * lit(1L << 42) + invId
+      .when(col("quality_ppm").isNull,
+        raise_error(concat(lit("keepBestFromLabels: null quality_ppm for "
+          + "doc_id "), col("doc_id").cast(StringType))))
+      .otherwise(col("quality_ppm") * lit(1L << 42)
+        + (lit(idCap) - col("doc_id")).cast(LongType))
     lab.join(qual, "doc_id")
       .groupBy(col("cluster_id"))
       .agg(max(enc).as("kp"), count(lit(1)).as("cluster_size"))
@@ -1113,13 +1084,6 @@ object Components {
       .orderBy(col("cluster_id"))
   }
 
-  /** [[keepBestFromLabels]] with the closure run inline — the
-    * LabelCacheBench recompute baseline and the generic-edge-list entry
-    * point.
-    */
-  private[graft] def keepBestFromPairs(pairs: DataFrame, docs: DataFrame): DataFrame =
-    keepBestFromLabels(connectedComponents(pairs), docs)
-
   /** q_dedup_cc's downstream from a `(id, label)` labeling: per-cluster
     * size attached to every member. The window partitions by label —
     * cluster-sized partitions, never corpus-wide.
@@ -1132,8 +1096,7 @@ object Components {
         col("cluster_size"))
       .orderBy(col("doc_id"))
 
-  /** [[ccFromLabels]] with the closure run inline (LabelCacheBench
-    * recompute baseline / generic edge lists).
+  /** [[ccFromLabels]] with the closure run inline (generic edge lists).
     */
   private[graft] def ccFromPairs(pairs: DataFrame): DataFrame =
     ccFromLabels(connectedComponents(pairs))
@@ -1600,7 +1563,8 @@ object Components {
       // 100× 45 → 48 s — cache serialization beats the exchange-reused
       // recompute; the CLAUDE.md materialize-vs-recompute rule, measured
       // before trusting), so the shared shuffle rides ReuseExchange.
-      // Round-11 negative (HitsBucketedBench at 100×, VERDICT r10 #4):
+      // Round-11 negative (100×, VERDICT r10 #4; DESIGN.md § Round-11:
+      // the DuckDB chained-CTE cliff, "q_hits bucketed-layout"):
       // bucketBy(8, o_orderkey) artifacts for both join sides make the
       // orders join exchange-free, but cold build+consume measured
       // 9.1 + 39.6 s vs the shipped plan's 43.7 s min-of-2 — a wash at

@@ -819,8 +819,11 @@ object TextAnalysis {
   private[graft] def sumLenHof: Column =
     aggregate(transform(toks, x => length(x).cast(LongType)),
       lit(0L), (a, x) => a + x)
+  // `\z`, not `$`: Java's `$` also matches before a trailing line
+  // terminator ("abc\n"), where the oracle's regexp_full_match (RE2)
+  // and the alphaHits kernel do not
   private[graft] def alphaCntHof: Column =
-    size(filter(toks, x => x.rlike("^[a-z]+$"))).cast(LongType)
+    size(filter(toks, x => x.rlike("^[a-z]+\\z"))).cast(LongType)
   private[llm] def oLexCount(lang: String): String = {
     val in = lexicons(lang).map(w => s"'$w'").mkString(", ")
     s"cast(len(list_filter(string_split(text, ' '), x -> x IN ($in))) as double)"

@@ -104,6 +104,29 @@ class ContractSpec extends AnyFunSuite {
       "concurrent execution must not perturb results")
   }
 
+  test("SparkSession.builder() is called only in Engine.session under src/main") {
+    // every entry point shares one session builder, so core count,
+    // input splits and log level cannot drift between mains
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"source root not found from ${root.toAbsolutePath}")
+    val builder = "SparkSession\\s*\\.\\s*builder\\b".r
+    val files = java.nio.file.Files.walk(root)
+    val offenders =
+      try files.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .map(p => root.relativize(p).toString -> p)
+        .filter(_._1 != "graft/Engine.scala")
+        .filter { case (_, p) =>
+          val code = java.nio.file.Files.readString(p)
+            .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+          builder.findFirstIn(code).isDefined
+        }.map(_._1).toList.sorted
+      finally files.close()
+    assert(offenders.isEmpty, s"session builders outside Engine.session: $offenders")
+  }
+
   test("every oracle is deterministic: ORDER BY present or single-row aggregate") {
     val bad = SparkEntry.oracleSql.filterNot { case (_, sql) =>
       val up = sql.toUpperCase

@@ -31,6 +31,27 @@ class ComponentsSpec extends AnyFunSuite {
     assert(refPlan.contains("ObjectHashAggregate") || refPlan.contains("SortAggregate"))
   }
 
+  test("keepBestFromLabels fails loudly on a null quality score") {
+    // a null quality_ppm nulls the packed key, which max skips, while
+    // the reference still picks a member: the packed form must raise
+    // rather than drift from it
+    import spark.implicits._
+    val labels = Seq((1L, 1L), (2L, 1L), (3L, 3L)).toDF("id", "label")
+    val docs = Seq((1L, 7, Some("the cat")), (2L, 7, None),
+        (3L, 6, Some("a bird")))
+      .toDF("doc_id", "n_chars", "text")
+    val refKeep = Components.keepBestFromLabelsRef(labels, docs)
+      .where(col("cluster_id") === 1L).select("keep_id").head()
+    assert(!refKeep.isNullAt(0) && Set(1L, 2L).contains(refKeep.getLong(0)))
+    val err = intercept[Exception] {
+      Components.keepBestFromLabels(labels, docs).collect()
+    }
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).take(10).flatMap(t => Option(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains("keepBestFromLabels: null quality_ppm for doc_id 2")),
+      msgs.headOption.getOrElse(""))
+  }
+
   test("q_contrastive_pairs: positives are graph neighbors, negatives never are, draw is deterministic") {
     val q = graft.Registry.all("q_contrastive_pairs")
     val a = q.fn(spark, TestSpark.sfDir).collect()

@@ -367,7 +367,8 @@ class LlmSpec extends AnyFunSuite {
 
   test("IVF topK at defaults: mean recall >= 0.9 over 5 queries, min >= 0.8") {
     // multi-query recall at the measured operating point (8/16 probes,
-    // 1 Lloyd iteration — see IvfCurve / DESIGN.md); a single lucky
+    // 1 Lloyd iteration — DESIGN.md § Known gaps / decisions, "ANN
+    // operating point"); a single lucky
     // query would overstate the operator
     val queryIds = Seq(0L, 7L, 42L, 99L, 123L)
     val recalls = queryIds.map { q =>
@@ -731,10 +732,12 @@ class LlmSpec extends AnyFunSuite {
     assert(kernel.except(hof).isEmpty && hof.except(kernel).isEmpty)
     assert(kernel.count() === docs.count())
     // edge shapes split() is picky about: empty text, leading/trailing/
-    // consecutive spaces (empty tokens), multibyte + non-alpha mixes
+    // consecutive spaces (empty tokens), multibyte + non-alpha mixes, and
+    // tokens ending in a line terminator (not alphabetic — Java's `$`
+    // would match before it, RE2's full match does not)
     import spark.implicits._
     val edge = Seq((1L, ""), (2L, " "), (3L, "the  the "), (4L, " 的 a1 z"),
-      (5L, "the quick 的 brown fox"))
+      (5L, "the quick 的 brown fox"), (6L, "abc\n the"), (7L, "the abc\r"))
       .toDF("doc_id", "text")
     val ek = edge.select(col("doc_id"), TextAnalysis.lexCount("en").as("l"),
       TextAnalysis.lexCount("zh").as("z"),
@@ -747,7 +750,8 @@ class LlmSpec extends AnyFunSuite {
     assert(ek.orderBy(col("doc_id")).collect().map(_.toSeq).toSeq == Seq(
       Seq(1L, 0.0, 0.0, 0L, 1L), Seq(2L, 0.0, 0.0, 0L, 2L),
       Seq(3L, 2.0, 0.0, 2L, 4L), Seq(4L, 0.0, 1.0, 1L, 4L),
-      Seq(5L, 1.0, 1.0, 4L, 5L)))
+      Seq(5L, 1.0, 1.0, 4L, 5L), Seq(6L, 1.0, 0.0, 1L, 2L),
+      Seq(7L, 1.0, 0.0, 1L, 2L)))
   }
 
   test("LineChunks / CooccurPairs kernels equal the HOF chains row-for-row (round 16)") {
@@ -806,6 +810,23 @@ class LlmSpec extends AnyFunSuite {
       s"fused knn argmax regressed to a sort/object aggregate:\n$plan")
     val refPlan = ref.queryExecution.executedPlan.toString
     assert(refPlan.contains("ObjectHashAggregate") || refPlan.contains("SortAggregate"))
+  }
+
+  test("roundedArgmaxByGroup fails loudly on a NaN or infinite score") {
+    // NaN would cast to a garbage rank and ±Inf overflow the packed long
+    // — both must raise, never land in the max as a silent winner/loser
+    import spark.implicits._
+    Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity).foreach { bad =>
+      val scored = Seq((1L, 2L, 0.5), (1L, 3L, bad), (4L, 5L, -0.25))
+        .toDF("v", "nb", "cos_r")
+      val err = intercept[Exception] {
+        Similarity.roundedArgmaxByGroup(scored, "v", "nb", "cos_r", "nb").collect()
+      }
+      val msgs = Iterator.iterate[Throwable](err)(_.getCause)
+        .takeWhile(_ != null).take(10).flatMap(t => Option(t.getMessage)).toSeq
+      assert(msgs.exists(_.contains("roundedArgmaxByGroup: cos_r outside [-1, 1]")),
+        s"score $bad: ${msgs.headOption.getOrElse("")}")
+    }
   }
 
   test("fused packed-long nbClassify argmin equals the min(struct) reference (round 16)") {
@@ -2512,8 +2533,9 @@ class LlmSpec extends AnyFunSuite {
     // here: a 2.0-shifted replica is an angular point mass that NO
     // cosine quantizer — fresh or retrained — can split across cells,
     // so post-retrain skew would stay above the trigger by data shape,
-    // not by staleness; AppendDriftCurve at sf0.1 carries the heavy-
-    // drift skew story, where mass spreads over 245 cells.)
+    // not by staleness; DESIGN.md § Round-13, "Index lifecycle",
+    // records the heavy-drift skew story at sf0.1, where mass spreads
+    // over 245 cells.)
     var live = base
     (1 to 5).foreach { round =>
       val add = base
